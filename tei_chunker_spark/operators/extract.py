@@ -126,8 +126,10 @@ def salt_column(num_partitions: int, col: str = "doc_id") -> Column:
     return F.pmod(F.xxhash64(F.col(col)), F.lit(num_partitions)).cast("int")
 
 
-def _salted(df: DataFrame, job: JobConfig) -> DataFrame:
-    """The shared head of every extraction-family pipeline.
+def salted_reassembly(df: DataFrame, job: JobConfig) -> DataFrame:
+    """documents(doc_id, spans) -> (doc_id, xml, media), one row per input
+    row: the first half of :func:`extract_pipeline`, shared by every
+    extraction-family pipeline.
 
     Salt + shuffle FIRST, reassemble AFTER: the concat/sort codegen then
     runs in the p-way wide stage instead of the scan stage, whose task
@@ -136,15 +138,21 @@ def _salted(df: DataFrame, job: JobConfig) -> DataFrame:
     If the table is already bucketed on the salt key (Iceberg
     bucket(P, doc_id) layout), skip the shuffle entirely — at 100 TB the
     repartition would otherwise move every input byte once for nothing."""
-    if job.assume_bucketed_input:
-        return df.select("doc_id", "spans")
-    p = job.shuffle_partitions
-    return (
-        df.select("doc_id", "spans")
-        .withColumn("_salt", salt_column(p))
-        .repartition(p, "_salt")
-        .drop("_salt")
-    )
+    docs = df.select("doc_id", "spans")
+    if not job.assume_bucketed_input:
+        p = job.shuffle_partitions
+        docs = (
+            docs.withColumn("_salt", salt_column(p))
+            .repartition(p, "_salt")
+            .drop("_salt")
+        )
+    return reassembled(docs)
+
+
+def chunk_stage(docs: DataFrame, cfg: ChunkerConfig) -> DataFrame:
+    """(doc_id, xml, media) -> spans_out: the Python half of
+    :func:`extract_pipeline`, one Arrow-batched ``mapInPandas``."""
+    return docs.mapInPandas(make_batch_extractor(cfg), SPAN_SCHEMA_DDL)
 
 
 def extract_pipeline(df: DataFrame, job: JobConfig) -> DataFrame:
@@ -153,9 +161,7 @@ def extract_pipeline(df: DataFrame, job: JobConfig) -> DataFrame:
     Output row order within a document is the semantic ``offset``; global
     order is undefined (it's a distributed table — verification sorts).
     """
-    return reassembled(_salted(df, job)).mapInPandas(
-        make_batch_extractor(job.chunker), SPAN_SCHEMA_DDL
-    )
+    return chunk_stage(salted_reassembly(df, job), job.chunker)
 
 
 def media_ref_pipeline(df: DataFrame) -> DataFrame:
@@ -191,7 +197,6 @@ def section_metadata_pipeline(df: DataFrame, job: JobConfig) -> DataFrame:
     section — (doc_id, section_idx, title, level, length,
     subsection_count), length = direct content only.  Same physical shape
     as extract_pipeline: scan -> one salted exchange -> mapInPandas."""
-    salted = _salted(df, job)
     cap = job.chunker.max_doc_chars
 
     def meta_batches(batches: Iterable) -> Iterator:
@@ -223,7 +228,7 @@ def section_metadata_pipeline(df: DataFrame, job: JobConfig) -> DataFrame:
     # media array, and the projection lets Catalyst prune the media
     # filter/transform out of the plan AND off the Arrow wire.
     return (
-        reassembled(salted)
+        salted_reassembly(df, job)
         .select("doc_id", "xml")
         .mapInPandas(meta_batches, SECTION_SCHEMA_DDL)
     )

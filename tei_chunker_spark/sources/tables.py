@@ -72,7 +72,9 @@ def table_size(sf_dir: str, name: str) -> int:
 
 def table_rows(sf_dir: str, name: str) -> int:
     """Footer row count of a registry table (0 when unknown) — metadata
-    only, memoized; the widen="auto" gate's compute-volume proxy."""
+    only; the widen="auto" gate's compute-volume proxy.  Only successful
+    footer reads are memoized: a transient failure must not pin 0 (and
+    with it a narrow scan) for the rest of the session."""
     path = os.path.join(sf_dir, f"{name}.parquet")
     n = _ROWS_MEMO.get(path)
     if n is None:
@@ -81,7 +83,7 @@ def table_rows(sf_dir: str, name: str) -> int:
 
             n = pq.ParquetFile(path).metadata.num_rows
         except Exception:
-            n = 0
+            return 0
         _ROWS_MEMO[path] = n
     return n
 
@@ -115,6 +117,8 @@ def load(
     byte cap.  ``widen="auto"``: additionally require the footer row
     count to clear _WIDEN_MIN_ROWS — for cheap-per-row consumers where
     the exchange only pays for itself once the table is large."""
+    if not (isinstance(widen, bool) or widen == "auto"):
+        raise ValueError(f"widen must be False, True or 'auto'; got {widen!r}")
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
     path = os.path.join(sf_dir, f"{name}.parquet")

@@ -10,7 +10,6 @@ from tei_chunker_spark.corpus import INPUT_SCHEMA_DDL, make_rows
 from tei_chunker_spark.manifest import (
     completed_buckets,
     read_manifest,
-    resume_filter,
     run_resumable,
 )
 from tei_chunker_spark.operators.extract import extract_pipeline
@@ -78,6 +77,67 @@ def test_crash_then_resume_no_dupes_no_gaps(spark, corpus_path, tmp_path):
     assert all(r.doc_count <= r.input_doc_count for r in latest.values())
 
 
+def _latest(spark, manifest, job_id):
+    latest = {}
+    for r in read_manifest(spark, manifest).filter(f"job_id = '{job_id}'").collect():
+        if r.bucket not in latest or r.attempt > latest[r.bucket].attempt:
+            latest[r.bucket] = r
+    return latest
+
+
+def test_manifest_counts_exact_per_bucket(spark, tmp_path):
+    """Each bucket's three counts equal a direct recount of the input and
+    of the written output — per bucket, not only as sums — including
+    buckets where documents vanish (malformed XML, the max_doc_chars cap,
+    empty or NULL span arrays) so input_doc_count > doc_count."""
+    from pyspark.sql import functions as F
+
+    from tei_chunker_spark.operators.extract import salt_column
+
+    rows = make_rows([f"x{i}" for i in range(200)])
+    rows += [
+        {"doc_id": f"bad{i}", "spans": [
+            {"kind": "text", "text": "<TEI><unclosed ", "media_ref": None, "offset": 0}
+        ]}
+        for i in range(12)
+    ]
+    rows += [{"doc_id": "empty", "spans": []}, {"doc_id": "null", "spans": None}]
+    cap = 4000
+    assert any(sum(len(s["text"] or "") for s in r["spans"] or []) > cap for r in rows)
+    corpus = str(tmp_path / "input")
+    spark.createDataFrame(rows, INPUT_SCHEMA_DDL).write.parquet(corpus)
+    job = JobConfig(
+        chunker=ChunkerConfig(max_chunk_size=500, overlap_size=50, max_doc_chars=cap),
+        num_buckets=8,
+        shuffle_partitions=8,
+    )
+    out, manifest = str(tmp_path / "out"), str(tmp_path / "manifest")
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run_resumable(spark, corpus, out, manifest, job, job_id="exact",
+                      wave_size=3, fail_after_waves=1)
+    run_resumable(spark, corpus, out, manifest, job, job_id="exact", wave_size=3)
+
+    nb = job.num_buckets
+    inputs = {
+        r.bucket: r.n
+        for r in spark.read.parquet(corpus).groupBy(salt_column(nb).alias("bucket"))
+        .agg(F.count(F.lit(1)).alias("n")).collect()
+    }
+    outputs = {
+        r.bucket: (r.docs, r.spans)
+        for r in spark.read.parquet(out).groupBy("bucket")
+        .agg(F.countDistinct("doc_id").alias("docs"), F.count(F.lit(1)).alias("spans"))
+        .collect()
+    }
+    latest = _latest(spark, manifest, "exact")
+    assert set(latest) == set(range(nb))
+    for b, r in latest.items():
+        assert r.status == "done"
+        assert r.input_doc_count == inputs.get(b, 0), b
+        assert (r.doc_count, r.span_count) == outputs.get(b, (0, 0)), b
+    assert any(r.input_doc_count > r.doc_count for r in latest.values())
+
+
 def test_rerun_completed_job_is_noop(spark, corpus_path, tmp_path):
     out = str(tmp_path / "out")
     manifest = str(tmp_path / "manifest")
@@ -87,14 +147,28 @@ def test_rerun_completed_job_is_noop(spark, corpus_path, tmp_path):
     assert read_manifest(spark, manifest).count() == n_manifest  # nothing re-done
 
 
-def test_resume_filter_is_anti_join(spark, corpus_path):
-    df = spark.read.parquet(corpus_path)
-    kept = resume_filter(df, [0, 1], JOB.num_buckets)
-    from tei_chunker_spark.manifest import bucket_column
+def test_failed_wave_is_recorded_then_rerun_completes(spark, corpus_path, tmp_path):
+    """A write that raises leaves status='failed' rows (error class in the
+    lineage) for its wave, re-raises, and a rerun completes those buckets."""
+    import json
 
-    remaining_buckets = {
-        r.bucket for r in kept.select(bucket_column(JOB.num_buckets)).distinct().collect()
-    }
-    assert remaining_buckets.isdisjoint({0, 1})
-    assert kept.count() < df.count()
-    assert kept.columns == df.columns
+    from dataclasses import replace
+
+    out, manifest = str(tmp_path / "out"), str(tmp_path / "manifest")
+    broken = replace(JOB, output_format="no_such_format")
+    with pytest.raises(Exception) as err:
+        run_resumable(spark, corpus_path, out, manifest, broken, job_id="f", wave_size=3)
+    assert "injected failure" not in str(err.value)
+
+    failed = read_manifest(spark, manifest).filter("job_id = 'f'").collect()
+    assert sorted(r.bucket for r in failed) == [0, 1, 2]
+    assert {r.status for r in failed} == {"failed"}
+    assert {r.attempt for r in failed} == {1}
+    assert all(json.loads(r.lineage_json)["error"] == type(err.value).__name__ for r in failed)
+    assert completed_buckets(spark, manifest, "f") == []
+
+    run_resumable(spark, corpus_path, out, manifest, JOB, job_id="f", wave_size=3)
+    latest = _latest(spark, manifest, "f")
+    assert completed_buckets(spark, manifest, "f") == list(range(JOB.num_buckets))
+    assert {r.status for r in latest.values()} == {"done"}
+    assert {latest[b].attempt for b in (0, 1, 2)} == {2}

@@ -294,3 +294,61 @@ def test_join_strategy_hints_are_honored(spark):
         assert j.count() == 100
         plan = j._jdf.queryExecution().executedPlan().toString()
         assert node in plan, (hint, plan)
+
+
+def _observed_write_plan(spark, after_id: int) -> list:
+    """Final physical plan (tree lines, root first) of the first observed
+    parquet write recorded after execution ``after_id``."""
+    import time
+
+    store = spark._jsparkSession.sharedState().statusStore()
+    deadline = time.time() + 30
+    while time.time() < deadline:
+        executions = store.executionsList()
+        for k in range(executions.size()):
+            e = executions.apply(k)
+            plan = e.physicalPlanDescription()
+            if (
+                e.executionId() > after_id
+                and not e.completionTime().isEmpty()
+                and "InsertIntoHadoopFsRelationCommand" in plan
+                and "CollectMetrics" in plan
+            ):
+                return plan.split("== Initial Plan ==")[0].split("\n\n")[0].splitlines()
+        time.sleep(0.1)
+    raise AssertionError("no observed write recorded")
+
+
+@pytest.mark.parametrize("bucketed", [False, True])
+def test_manifest_observations_in_write_result_stage(spark, corpus_path, tmp_path, bucketed):
+    """Both per-bucket observations of a manifest wave sit above the salt
+    exchange, in the write's result stage (metrics exact under task
+    retry); with pre-bucketed input there is no exchange and both are
+    still observed."""
+    from tei_chunker_spark.manifest import run_resumable
+
+    job = JobConfig(
+        chunker=ChunkerConfig(500, 50), shuffle_partitions=8, num_buckets=4,
+        assume_bucketed_input=bucketed,
+    )
+    store = spark._jsparkSession.sharedState().statusStore()
+    executions = store.executionsList()
+    last = max((executions.apply(k).executionId() for k in range(executions.size())), default=-1)
+    run_resumable(spark, corpus_path, str(tmp_path / "out"), str(tmp_path / "m"), job,
+                  wave_size=job.num_buckets)
+    tree = _observed_write_plan(spark, last)
+
+    def rows(name):
+        return [i for i, line in enumerate(tree) if name in line]
+
+    metrics, exchanges = rows("CollectMetrics"), rows("Exchange")
+    write = rows("InsertIntoHadoopFsRelationCommand")
+    assert len(metrics) == 2 and len(write) == 1
+    assert len(rows("Scan")) == 1  # one chain: line order is ancestry
+    if bucketed:
+        assert exchanges == []
+    else:
+        assert len(exchanges) == 1
+        # the exchange is the only stage boundary, so everything above it
+        # runs in the write's result stage
+        assert write[0] < min(metrics) and max(metrics) < exchanges[0]

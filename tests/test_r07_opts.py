@@ -4,6 +4,7 @@ rows as its straightforward formulation.
 """
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from tei_chunker_spark.operators import dedup
@@ -114,6 +115,27 @@ def test_widen_small_row_floor(spark):
     plain = tables.load(spark, "/root/testdata/sf0.01", "documents")
     assert narrow.rdd.getNumPartitions() == plain.rdd.getNumPartitions()
     assert tables.table_rows("/root/testdata/sf0.01", "documents") > 0
+
+
+def test_table_rows_memoizes_only_successful_reads(tmp_path):
+    """A failed footer read returns 0 without pinning it: once the file
+    is readable the real row count comes back."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from tei_chunker_spark.sources import tables
+
+    assert tables.table_rows(str(tmp_path), "documents") == 0  # no file yet
+    pq.write_table(pa.table({"x": list(range(7))}), str(tmp_path / "documents.parquet"))
+    assert tables.table_rows(str(tmp_path), "documents") == 7
+
+
+@pytest.mark.parametrize("widen", ["yes", "AUTO", 1, None])
+def test_load_rejects_unknown_widen(spark, tmp_path, widen):
+    from tei_chunker_spark.sources import tables
+
+    with pytest.raises(ValueError, match="widen"):
+        tables.load(spark, str(tmp_path), "documents", widen=widen)
 
 
 def test_norm_precompute_cosine_bit_identical(spark):
