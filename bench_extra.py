@@ -1,12 +1,11 @@
-"""Round-7 optimization harness (bench.py is FROZEN; extra measurements
-live here — guide §1).
+"""Extra measurements next to the frozen bench.py (guide §1).
 
 Modes:
   python bench_extra.py time [query ...]     best-of-N wall per query,
                                              bench.py-identical force()
   python bench_extra.py split [query ...]    construction+planning vs
                                              execution wall, per query
-  python bench_extra.py plans [query ...]    write plans/r07/<q>_<tag>.txt
+  python bench_extra.py plans [query ...]    write plans/r08/<q>_<tag>.txt
                                              (tag via PLAN_TAG, default
                                              'before') with
                                              explain("formatted")
@@ -24,23 +23,14 @@ import time
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
+from bench import HEADLINE  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 REPEATS = int(os.environ.get("TEI_EXTRA_REPEATS", "3"))
 PLAN_TAG = os.environ.get("PLAN_TAG", "before")
 
-HEADLINE = [
-    "extract_spans_pipeline",
-    "doc_stats",
-    "doc_fingerprint",
-    "dedup_exact",
-    "dedup_minhash_lsh",
-    "dedup_ngram_jaccard",
-    "ann_bruteforce_topk",
-    "events_sessionize",
-    "pricing_summary",
-    "revenue_by_nation",
-]
+PLAN_DIR = os.path.join(REPO, "plans", "r08")
 
 
 def main() -> None:
@@ -67,12 +57,12 @@ def main() -> None:
         fn = queries[name]
         spark.sparkContext.setJobDescription(f"{mode}:{name}")
         if mode == "plans":
-            os.makedirs(os.path.join(REPO, "plans", "r07"), exist_ok=True)
+            os.makedirs(PLAN_DIR, exist_ok=True)
             df = fn(spark, SF_DIR)
             txt = df._sc._jvm.PythonSQLUtils.explainString(
                 df._jdf.queryExecution(), "formatted"
             )
-            path = os.path.join(REPO, "plans", "r07", f"{name}_{PLAN_TAG}.txt")
+            path = os.path.join(PLAN_DIR, f"{name}_{PLAN_TAG}.txt")
             with open(path, "w") as fh:
                 fh.write(txt)
             print(f"{name}: wrote {path}")

@@ -101,6 +101,7 @@ def dry_run(spark, n_docs: int = 200) -> int:
     runtime jar is resolvable."""
     from tei_chunker_spark.config import ChunkerConfig, JobConfig
     from tei_chunker_spark.corpus import corpus_df
+    from tei_chunker_spark.functions.columns import barrier
     from tei_chunker_spark.operators.extract import extract_pipeline, salt_column
 
     job_ice = e2e_job(BUCKETS)
@@ -109,10 +110,9 @@ def dry_run(spark, n_docs: int = 200) -> int:
     # Materialized eagerly so the stand-in's own repartition is not part of
     # the plan under inspection (on a real cluster the layout lives in the
     # table, not the query).
-    docs = (
-        corpus_df(spark, n_docs)
-        .repartition(BUCKETS, salt_column(BUCKETS))
-        .localCheckpoint(eager=True)
+    docs = barrier(
+        corpus_df(spark, n_docs).repartition(BUCKETS, salt_column(BUCKETS)),
+        eager=True,
     )
     # Format knobs steer the scan/sink only; the pipeline between them is
     # what we exercise here (parquet stand-ins for both ends).

@@ -1,10 +1,10 @@
 """Job configuration for the extraction pipeline.
 
-Mirrors the reference chunker's three knobs (reference
+Mirrors the reference chunker's knobs (reference
 ``tei_chunker/chunking.py:60-65``) plus Spark execution knobs that have no
-reference analogue.  ``min_section_size`` is accepted for API compatibility
-but is dead config in the reference too (stored at ``chunking.py:65``, never
-read), so it deliberately has no effect here either.
+reference analogue.  The reference's third knob, ``min_section_size``, is
+dead config there (stored at ``chunking.py:65``, never read), so it has no
+counterpart here.
 """
 from __future__ import annotations
 
@@ -23,7 +23,6 @@ class ChunkerConfig:
 
     max_chunk_size: int = DEFAULT_MAX_CHUNK_SIZE
     overlap_size: int = DEFAULT_OVERLAP_SIZE
-    min_section_size: int = 1000  # dead config, kept for parity (chunking.py:65)
     # Guardrail (None = off, golden behavior): documents whose reassembled
     # XML exceeds this many characters are NOT parsed — they emit zero text
     # spans (media passthrough unaffected) instead of risking a worker OOM.
@@ -46,10 +45,6 @@ class JobConfig:
     chunker: ChunkerConfig = field(default_factory=ChunkerConfig)
     num_buckets: int = 16
     shuffle_partitions: int = 64
-    # Rows are whole documents, so Arrow batches stay modest to bound
-    # Python-worker memory against the oversized-doc tail; 256 measured
-    # fastest (64 pays per-batch pandas overhead, 1024 is GC-erratic).
-    arrow_max_records_per_batch: int = 256
     input_format: str = "parquet"  # "iceberg" on a real cluster
     output_format: str = "parquet"
     # When the input table is already bucketed by pmod(xxhash64(doc_id), P)

@@ -16,7 +16,7 @@ in __spark_entry__.py) — portability constraints worth knowing:
 """
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 # --- tokens ---------------------------------------------------------------
@@ -67,10 +67,9 @@ def tokens(col: Column) -> Column:
 def token_count(col: Column) -> Column:
     """Whitespace-token count with the blank guard (split('') is [''],
     size 1 — the guard makes the blank document count 0).  NOTE:
-    operators that already materialized the token array behind a
-    generator barrier (textstats._with_tokens) inline this formula against
-    the materialized column instead of calling it — calling it there
-    would re-split the text."""
+    operators that already materialized the token array (``with_tokens``)
+    inline this formula against the materialized column instead of
+    calling it — calling it there would re-split the text."""
     return F.when(is_blank(col), F.lit(0)).otherwise(F.size(tokens(col)))
 
 
@@ -145,21 +144,29 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (l2norm(a) * l2norm(b))
 
 
-def tokens_with_count(documents, text_col: str = "text"):
-    """(doc_id, tok: array<string>, n_tokens: long) — the whitespace
-    token array materialized ONCE behind a generator barrier (see
-    dedup._tokens_materialized for the re-inline hazard) with the
-    blank-document guard applied: blank text splits to [''], which must
-    count as 0 tokens, not 1.
+def with_tokens(df: DataFrame, *keep: str, text_col: str = "text") -> DataFrame:
+    """``keep`` columns (all when none are given) plus ``tok:
+    array<string>``, the whitespace split FORCED to evaluate once per row.
 
-    This subtle guard used to be copy-pasted into four operators
-    (cdc_segment_census, lm_bigram_score, winnow_fingerprint_census,
-    phrase_match_census); a divergence in any one copy would silently
-    split engine-vs-oracle behavior for just that op — it lives here
-    once instead."""
-    return documents.select(
-        "doc_id", F.explode(F.array(tokens(F.col(text_col)))).alias("tok")
-    ).select(
+    ``explode(array(...))`` is a generator, and projection collapsing
+    cannot inline expressions through a generator boundary.  Without it,
+    Catalyst substitutes the ``split`` subtree into every downstream
+    reference (``size``, each ``element_at`` of an n-gram), and the
+    interpreted higher-order functions re-split the text per reference:
+    a 5k-row band join took 38 s because each probe re-evaluated ~200
+    splits; with this barrier the same join is <1 s.  Every tokenizing
+    operator goes through here (pinned by tests/test_plans.py)."""
+    return df.select(
+        *(keep or ("*",)), F.explode(F.array(tokens(F.col(text_col)))).alias("tok")
+    )
+
+
+def tokens_with_count(documents: DataFrame) -> DataFrame:
+    """(doc_id, tok: array<string>, n_tokens: long) — ``with_tokens`` plus
+    the blank-document guard: blank text splits to [''], which must count
+    as 0 tokens, not 1.  The guard lives here once, so no operator's copy
+    can drift from the oracle's."""
+    return with_tokens(documents, "doc_id").select(
         "doc_id",
         "tok",
         F.when(
@@ -169,6 +176,25 @@ def tokens_with_count(documents, text_col: str = "text"):
         .cast("long")
         .alias("n_tokens"),
     )
+
+
+def barrier(df: DataFrame, eager: bool = False) -> DataFrame:
+    """Materialize ``df`` once for every later reference: the one
+    materialization policy of the engine.
+
+    ``localCheckpoint``, not ``persist``: the checkpoint's RDD blocks are
+    managed by the ContextCleaner and freed once the returned DataFrame is
+    garbage-collected, whereas a Dataset persist stays in the CacheManager
+    until an explicit ``unpersist`` — a leak across a long session.  Lazy
+    by default: the blocks land inside the first action that reads them
+    instead of in a separate blocking job — same total work, one
+    scheduling barrier less — and are shared by every later reference.
+    ``eager=True`` materializes now.
+
+    The checkpoint truncates lineage, so a lost executor cannot recompute
+    its blocks; on a cluster with executor loss use reliable checkpointing
+    or a table write instead."""
+    return df.localCheckpoint(eager=eager)
 
 
 def cosine_safe(a: Column, b: Column) -> Column:

@@ -86,7 +86,6 @@ def main(argv=None) -> None:
         "tei-extract",
         master=args.master,
         shuffle_partitions=args.shuffle_partitions,
-        arrow_batch=job.arrow_max_records_per_batch,
     )
 
     if args.no_manifest or not args.manifest:

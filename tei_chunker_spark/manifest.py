@@ -32,11 +32,13 @@ import time
 from typing import List, Optional, Sequence, Set, Tuple
 
 import pandas as pd
+from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .config import JobConfig
 from .operators.extract import chunk_stage, salted_reassembly, salt_column
+from .sources.session import ARROW_MAX_RECORDS_PER_BATCH
 
 _log = logging.getLogger(__name__)
 
@@ -47,10 +49,16 @@ MANIFEST_SCHEMA_DDL = (
 
 
 def read_manifest(spark: SparkSession, path: str) -> Optional[DataFrame]:
+    """The manifest table, or None when ``path`` does not exist yet (first
+    run).  Any other read error propagates: treating, say, a transient
+    listing failure as "no manifest" would restart the job at attempt 1
+    and reprocess every bucket."""
     try:
         return spark.read.schema(MANIFEST_SCHEMA_DDL).parquet(path)
-    except Exception:
-        return None  # first run: no manifest yet
+    except AnalysisException as exc:
+        if exc.getCondition() == "PATH_NOT_FOUND":
+            return None
+        raise
 
 
 def _manifest_state(spark: SparkSession, path: str, job_id: str) -> Tuple[Set[int], int]:
@@ -171,8 +179,7 @@ def run_resumable(
     attempt = last_attempt + 1
 
     spark.conf.set(
-        "spark.sql.execution.arrow.maxRecordsPerBatch",
-        str(job.arrow_max_records_per_batch),
+        "spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_MAX_RECORDS_PER_BATCH)
     )
     input_df = spark.read.format(job.input_format).load(input_path)
 

@@ -29,7 +29,7 @@ from typing import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.columns import cosine, cosine_safe, tokens, word_ngrams
+from ..functions.columns import barrier, tokens_with_count, with_tokens, word_ngrams
 from .textstats import simhash64
 
 MINHASH_SEEDS = ("s0/", "s1/", "s2/", "s3/")
@@ -47,23 +47,9 @@ def exact_dedup(documents: DataFrame) -> DataFrame:
     )
 
 
-def _tokens_materialized(documents: DataFrame) -> DataFrame:
-    """(doc_id, tok: array<string>) with the split FORCED to happen once.
-
-    ``explode(array(split(...)))`` is a generator, and projection collapsing
-    cannot inline expressions through a generator boundary — without it,
-    Catalyst substitutes the ``split`` subtree into every ``element_at``
-    reference and interpreted higher-order functions re-split the text per
-    element (measured: a 5k-row band join took 38 s because each probe
-    re-evaluated ~200 splits; with this barrier the same join is <1 s)."""
-    return documents.select(
-        "doc_id", F.explode(F.array(tokens(F.col("text")))).alias("tok")
-    )
-
-
 def shingle_table(documents: DataFrame, n: int = 2) -> DataFrame:
     """(doc_id, shingle) distinct word-n-gram postings."""
-    return _tokens_materialized(documents).select(
+    return with_tokens(documents, "doc_id").select(
         "doc_id",
         F.explode(F.array_distinct(word_ngrams(F.col("tok"), n))).alias("shingle"),
     )
@@ -97,8 +83,66 @@ def minhash_signatures_from(
     return shingles.groupBy("doc_id").agg(*aggs)
 
 
-def minhash_signatures(documents: DataFrame, n: int = 2) -> DataFrame:
-    return minhash_signatures_from(shingle_table(documents, n))
+def _capped_postings(shingles: DataFrame, max_shingle_df: int | None) -> DataFrame:
+    """Postings with document frequency above ``max_shingle_df`` dropped
+    (posting-list guillotine for scale); ``shingles`` itself when uncapped.
+
+    One corpus tokenize pass and one df aggregate (r7, guide §1.2 /
+    §2.3): the RAW posting table is checkpointed so the cap aggregate and
+    the join probe side share a single tokenize of the corpus, and each
+    surviving posting is ANNOTATED with its ``_df`` instead of being
+    semi-joined against a keep-list, so ``_pair_intersections`` reuses the
+    same aggregate for its df >= 2 filter instead of running a second
+    one."""
+    if max_shingle_df is None:
+        return shingles
+    shingles = barrier(shingles)
+    dfs = shingles.groupBy("shingle").agg(F.count(F.lit(1)).alias("_df"))
+    return barrier(
+        shingles.join(dfs.filter(F.col("_df") <= max_shingle_df), "shingle")
+    )
+
+
+def _set_sizes(postings: DataFrame) -> DataFrame:
+    return postings.groupBy("doc_id").agg(F.count(F.lit(1)).alias("set_size"))
+
+
+def _pair_intersections(postings: DataFrame) -> DataFrame:
+    """(a_id, b_id, inter) for every doc pair a_id < b_id sharing >= 1
+    shingle — a hash-agg intersection with linear fan-in, no all-pairs.
+
+    Postings with document frequency 1 can never produce a pair: they are
+    dropped from the JOIN side only (set sizes count them, so scores are
+    unchanged).  On ``_capped_postings`` output that is a FILTER on the
+    ``_df`` annotation; otherwise it takes a dedicated df aggregate."""
+    if "_df" in postings.columns:
+        joinable = postings.filter(F.col("_df") >= 2).select("doc_id", "shingle")
+    else:
+        paired = (
+            postings.groupBy("shingle")
+            .agg(F.count(F.lit(1)).alias("df"))
+            .filter(F.col("df") >= 2)
+            .select("shingle")
+        )
+        joinable = postings.join(paired, "shingle")
+    a = joinable.alias("a")
+    b = joinable.alias("b")
+    return (
+        a.join(b, on=(F.col("a.shingle") == F.col("b.shingle")))
+        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
+        .groupBy(
+            F.col("a.doc_id").alias("a_id"), F.col("b.doc_id").alias("b_id")
+        )
+        .agg(F.count(F.lit(1)).alias("inter"))
+    )
+
+
+def _with_set_sizes(inter: DataFrame, sizes: DataFrame) -> DataFrame:
+    """``inter`` plus ``a_size`` / ``b_size`` from a (doc_id, set_size)
+    table."""
+    sa = sizes.withColumnRenamed("doc_id", "a_id").withColumnRenamed("set_size", "a_size")
+    sb = sizes.withColumnRenamed("doc_id", "b_id").withColumnRenamed("set_size", "b_size")
+    return inter.join(sa, "a_id").join(sb, "b_id")
 
 
 def jaccard_pairs(
@@ -113,40 +157,15 @@ def jaccard_pairs(
     With ``candidates`` (a_id, b_id) the verify is restricted to those
     pairs; otherwise all pairs sharing >= 1 shingle are scored.
     ``max_shingle_df`` drops shingles whose document frequency exceeds the
-    cap before pairing (posting-list guillotine for scale).  ``sizes``
+    cap before pairing (see ``_capped_postings``).  ``sizes``
     (r7) lets a caller that already aggregated per-doc shingle counts
     (minhash_lsh_pairs folds them into the signature aggregate) pass the
     (doc_id, set_size) table instead of paying a second full pass over
     the postings here; only valid when it equals
     ``shingles.groupBy(doc_id).count()`` over THESE postings."""
-    has_df_col = False
-    if max_shingle_df is not None:
-        # ONE corpus tokenize pass + ONE df aggregate (r7, guide §1.2 /
-        # §2.3): checkpoint the RAW posting table so the cap aggregate and
-        # the join probe side share a single tokenize of the corpus (the
-        # pre-r7 shape re-derived ``shingles`` on both sides of the cap
-        # join — two full corpus scans), and ANNOTATE postings with their
-        # df instead of semi-joining a keep-list, so the all-pairs branch
-        # below reuses the same aggregate for its df >= 2 filter instead
-        # of running a second one.  localCheckpoint (not persist) on
-        # purpose: its RDD blocks are ContextCleaner-managed and freed
-        # when the result is garbage-collected, whereas a Dataset persist
-        # stays in the CacheManager until an explicit unpersist — a leak
-        # across a long session.  Lazy (eager=False, r7): materialization
-        # happens inside the first action instead of as a separate
-        # blocking job — same work, one less scheduling barrier.  On a
-        # real cluster with executor loss, use reliable checkpointing or
-        # a table write between stages instead.
-        shingles = shingles.localCheckpoint(eager=False)
-        dfs = shingles.groupBy("shingle").agg(F.count(F.lit(1)).alias("_df"))
-        shingles = shingles.join(
-            dfs.filter(F.col("_df") <= max_shingle_df), "shingle"
-        ).localCheckpoint(eager=False)
-        has_df_col = True
+    shingles = _capped_postings(shingles, max_shingle_df)
     if sizes is None:
-        sizes = shingles.groupBy("doc_id").agg(
-            F.count(F.lit(1)).alias("set_size")
-        )
+        sizes = _set_sizes(shingles)
     if candidates is not None:
         # Verify-only-candidates: route the posting join THROUGH the pair
         # list instead of exploding all co-occurring docs — |pairs| x
@@ -161,38 +180,9 @@ def jaccard_pairs(
             .agg(F.count(F.lit(1)).alias("inter"))
         )
     else:
-        # All-pairs mode: postings with document frequency 1 can never
-        # produce a pair — drop them from the JOIN side only (sizes above
-        # already counted them, so Jaccard is unchanged).  With the df
-        # annotation present this is a FILTER on the checkpointed table;
-        # otherwise fall back to a dedicated aggregate.
-        if has_df_col:
-            joinable = shingles.filter(F.col("_df") >= 2).select(
-                "doc_id", "shingle"
-            )
-        else:
-            paired = (
-                shingles.groupBy("shingle")
-                .agg(F.count(F.lit(1)).alias("df"))
-                .filter(F.col("df") >= 2)
-                .select("shingle")
-            )
-            joinable = shingles.join(paired, "shingle")
-        a = joinable.alias("a")
-        b = joinable.alias("b")
-        inter = (
-            a.join(b, on=(F.col("a.shingle") == F.col("b.shingle")))
-            .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-            .groupBy(
-                F.col("a.doc_id").alias("a_id"), F.col("b.doc_id").alias("b_id")
-            )
-            .agg(F.count(F.lit(1)).alias("inter"))
-        )
-    sa = sizes.withColumnRenamed("doc_id", "a_id").withColumnRenamed("set_size", "a_size")
-    sb = sizes.withColumnRenamed("doc_id", "b_id").withColumnRenamed("set_size", "b_size")
+        inter = _pair_intersections(shingles)
     return (
-        inter.join(sa, "a_id")
-        .join(sb, "b_id")
+        _with_set_sizes(inter, sizes)
         .select(
             "a_id",
             "b_id",
@@ -224,9 +214,10 @@ def containment_pairs(
     (computed once per unordered pair, then unpivoted to the two
     directions — the unpivot scans the pair-sized table, not postings).
 
-    Scale shape is jaccard_pairs': df-capped postings (``max_shingle_df``
-    guillotine), df>=2 join-side filter, hash-agg intersection — linear
-    fan-in, no all-pairs.  The df cap is MORE defensible here than for
+    Scale shape is jaccard_pairs' all-pairs path: df-capped postings
+    (``max_shingle_df`` guillotine), df>=2 join-side filter, hash-agg
+    intersection — linear fan-in, no all-pairs.  The df cap is MORE
+    defensible here than for
     Jaccard: a boilerplate shingle shared by B docs contributes B² pair
     rows but raises containment of full-page dups by at most 1/|src| —
     NOTE (round-6 advisory) that bound holds for the intersection only;
@@ -237,43 +228,8 @@ def containment_pairs(
     1.0 on a small absolute overlap.  Pair the cap with a minimum
     retained-set-size filter downstream if that matters for the
     corpus."""
-    has_df_col = False
-    if max_shingle_df is not None:
-        # Same one-tokenize / one-df-aggregate shape as jaccard_pairs
-        # (r7): raw postings checkpointed once, df annotated onto each
-        # posting, cap + df>=2 both read that single aggregate.  Lazy
-        # checkpoints — materialized inside the first action, not as
-        # separate blocking jobs (see jaccard_pairs note).
-        shingles = shingles.localCheckpoint(eager=False)
-        dfs = shingles.groupBy("shingle").agg(F.count(F.lit(1)).alias("_df"))
-        shingles = shingles.join(
-            dfs.filter(F.col("_df") <= max_shingle_df), "shingle"
-        ).localCheckpoint(eager=False)
-        has_df_col = True
-    sizes = shingles.groupBy("doc_id").agg(F.count(F.lit(1)).alias("set_size"))
-    if has_df_col:
-        joinable = shingles.filter(F.col("_df") >= 2).select("doc_id", "shingle")
-    else:
-        paired = (
-            shingles.groupBy("shingle")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .filter(F.col("df") >= 2)
-            .select("shingle")
-        )
-        joinable = shingles.join(paired, "shingle")
-    a = joinable.alias("a")
-    b = joinable.alias("b")
-    inter = (
-        a.join(b, on=(F.col("a.shingle") == F.col("b.shingle")))
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .groupBy(
-            F.col("a.doc_id").alias("a_id"), F.col("b.doc_id").alias("b_id")
-        )
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    sa = sizes.withColumnRenamed("doc_id", "a_id").withColumnRenamed("set_size", "a_size")
-    sb = sizes.withColumnRenamed("doc_id", "b_id").withColumnRenamed("set_size", "b_size")
-    both = inter.join(sa, "a_id").join(sb, "b_id")
+    shingles = _capped_postings(shingles, max_shingle_df)
+    both = _with_set_sizes(_pair_intersections(shingles), _set_sizes(shingles))
     directed = both.select(
         F.explode(
             F.array(
@@ -321,26 +277,22 @@ def _collapse_exact(documents: DataFrame):
     members array is O(B) ids per group (8B bytes for a B-doc identical
     cluster — ~80 MB at B=10^7, comfortably within an executor; the
     texts that the window shape would have concentrated are 3-5 orders
-    larger).  Both outputs are checkpointed (localCheckpoint —
-    ContextCleaner-managed, see jaccard_pairs note): groups feeds reps
+    larger).  Both outputs go behind a ``barrier``: groups feeds reps
     AND mapping; mapping is referenced four times by _expand_rep_pairs,
     and is checkpointed NARROW (no text column) so those four scans
     never deserialize document bodies."""
-    groups = (
-        documents.groupBy(F.md5("text").alias("_h"))
-        .agg(
+    groups = barrier(
+        documents.groupBy(F.md5("text").alias("_h")).agg(
             F.min("doc_id").alias("rep_id"),
             # all texts in a group are byte-identical (md5 key), so
             # first() is value-deterministic
             F.first("text").alias("text"),
             F.collect_list("doc_id").alias("_members"),
         )
-        .localCheckpoint(eager=False)
     )
-    mapping = (
+    mapping = barrier(
         groups.select("rep_id", F.explode("_members").alias("doc_id"))
         .select("doc_id", "rep_id")
-        .localCheckpoint(eager=False)
     )
     return mapping, groups.select(F.col("rep_id").alias("doc_id"), "text")
 
@@ -443,27 +395,20 @@ def minhash_lsh_pairs(
     (explicit recall trade, default off).
 
     The posting table feeds BOTH the signature build and the exact-Jaccard
-    verify; it is materialized once (local checkpoint, whose RDD
-    blocks the ContextCleaner frees on GC — unlike a Dataset persist,
-    which the CacheManager holds until explicit unpersist) so the corpus
-    is tokenized/shingled ONCE per invocation instead of twice (at 10^12
-    docs the duplicate expression tree would re-read every document).
-    Checkpoints are LAZY (r7): blocks materialize inside the first action
-    and are shared by every later reference — identical total work to the
-    former eager shape, minus one blocking job barrier per checkpoint."""
+    verify; it goes behind a ``barrier`` so the corpus is
+    tokenized/shingled ONCE per invocation instead of twice (at 10^12
+    docs the duplicate expression tree would re-read every document)."""
     if collapse_exact:
         mapping, docs = _collapse_exact(documents)
     else:
         mapping, docs = None, documents
-    sh = shingle_table(docs, n).localCheckpoint(eager=False)
+    sh = barrier(shingle_table(docs, n))
     # ONE doc-level aggregate (r7): signatures + set_size in the same
-    # pass, lazily checkpointed — it feeds the band postings, the Jaccard
+    # pass, behind a barrier — it feeds the band postings, the Jaccard
     # denominators, AND band eligibility below (pre-r7: three separate
     # full passes over the posting table — signature agg, sizes agg, and
     # a distinct doc_id agg).
-    sig = minhash_signatures_from(sh, with_size=True).localCheckpoint(
-        eager=False
-    )
+    sig = barrier(minhash_signatures_from(sh, with_size=True))
     # F.concat (not concat_ws): NULL-propagating like SQL ||, so a doc with
     # no shingles gets a NULL band and drops out of the equi-join cleanly.
     # Both bands go through ONE posting table keyed (band_idx, band_val)
@@ -731,8 +676,8 @@ def connected_components(
     minimum, converging in O(log n) rounds — unlike plain min-label
     propagation, whose round count is the component DIAMETER (a 10^6-long
     near-dup chain at corpus scale would need 10^6 barriers).
-    ``localCheckpoint`` per round truncates lineage (standard Spark
-    iterative discipline).
+    A ``barrier`` per round truncates lineage (standard Spark iterative
+    discipline).
 
     Convergence detection costs ONE action and no extra shuffle per round:
     an order-independent (count, sum, xor) checksum over xxhash64(u, v)
@@ -749,27 +694,25 @@ def connected_components(
     # runs exactly once — previously `nodes` replayed everything above
     # the pair table a second time inside the final label job (r7;
     # guide §1.2 "don't compute what you already computed").
-    edges = pairs.select(
-        F.col("a_id").alias("u"), F.col("b_id").alias("v")
-    ).localCheckpoint(eager=False)
+    edges = barrier(pairs.select(F.col("a_id").alias("u"), F.col("b_id").alias("v")))
     nodes = (
         edges.select("u")
         .unionByName(edges.select(F.col("v").alias("u")))
         .distinct()
         .select(F.col("u").alias("node"))
     )
-    # Lazy checkpoints (r7): the signature collect that follows each
-    # round materializes the checkpoint inside its own action — one job
-    # per round instead of two (ckpt job + signature job).  Edges live in
+    # Lazy barriers (r7): the signature collect that follows each round
+    # materializes the barrier inside its own action — one job per round
+    # instead of two (ckpt job + signature job).  Edges live in
     # canonical (u < v) orientation throughout — half the checkpointed
     # rows, half the distinct/signature bytes; the symmetric view each
     # star needs is a free disjoint union (_sym_view).
-    canon = _canonical_edges(edges).localCheckpoint(eager=False)
+    canon = barrier(_canonical_edges(edges))
     sig = _edge_set_signature(canon)
     for i in range(max_iterations):
         new_canon = _star(_star(canon, larger=True), larger=False)
         if (i + 1) % checkpoint_every == 0:
-            new_canon = new_canon.localCheckpoint(eager=False)
+            new_canon = barrier(new_canon)
         new_sig = _edge_set_signature(new_canon)
         canon = new_canon
         if new_sig == sig:
@@ -956,22 +899,9 @@ def substring_dup_spans(documents: DataFrame, k: int = 8) -> DataFrame:
     length, so no hot task exists by construction.  Blank / sub-``k``
     documents produce zero windows and re-enter via the final left join.
     """
-    # explode(array(...)) barrier: split once per row (see
-    # _tokens_materialized), then n_tokens inlined against the array.
-    t = documents.select(
-        "doc_id", F.explode(F.array(tokens(F.col("text")))).alias("tok")
-    ).select(
-        "doc_id",
-        "tok",
-        F.when(
-            (F.size("tok") == 1) & (F.element_at("tok", 1) == ""), F.lit(0)
-        )
-        .otherwise(F.size("tok"))
-        .cast("long")
-        .alias("n_tokens"),
-    ).localCheckpoint(eager=False)
-    # ^ t feeds the window-hash explode AND the final per-doc re-join;
-    # the lazy barrier stops the tokenize re-running per consumer (r7).
+    # t feeds the window-hash explode AND the final per-doc re-join; the
+    # barrier stops the tokenize re-running per consumer (r7).
+    t = barrier(tokens_with_count(documents))
     # sequence(1, n) DESCENDS in Spark when n < 1 — the when-guard makes
     # sub-k documents produce an empty array (DuckDB's generate_series is
     # already empty there).
@@ -979,16 +909,16 @@ def substring_dup_spans(documents: DataFrame, k: int = 8) -> DataFrame:
         F.sequence(F.lit(1), (F.col("n_tokens") - (k - 1)).cast("int")),
         lambda i: F.md5(F.concat_ws(" ", F.slice(F.col("tok"), i, k))),
     )
-    wins = t.select(
-        "doc_id",
-        F.posexplode(
-            F.when(F.col("n_tokens") >= k, win_hashes).otherwise(
-                F.array().cast("array<string>")
-            )
-        ).alias("pos", "w_hash"),
-    ).select(
-        "doc_id", (F.col("pos") + 1).alias("start"), "w_hash"
-    ).localCheckpoint(eager=False)
+    wins = barrier(
+        t.select(
+            "doc_id",
+            F.posexplode(
+                F.when(F.col("n_tokens") >= k, win_hashes).otherwise(
+                    F.array().cast("array<string>")
+                )
+            ).alias("pos", "w_hash"),
+        ).select("doc_id", (F.col("pos") + 1).alias("start"), "w_hash")
+    )
     # ^ wins feeds the occurrence aggregate AND the postings join; the
     # barrier runs the per-token md5 window transform once (r7 — the
     # heaviest per-row compute in this operator).
@@ -1075,18 +1005,20 @@ def incremental_dedup_census(base: DataFrame, new: DataFrame) -> DataFrame:
     base_norm = (
         base.select(F.md5(normalized_text(F.col("text"))).alias("nh")).distinct()
     )
-    # One pass over the batch (r7 lazy localCheckpoint): n feeds the two
+    # One pass over the batch (r7 barrier): n feeds the two
     # min-id aggregates AND the gate join — unbarriered, each consumer
     # replayed the batch union and both md5/normal-form projections
     # (final plan: 15 of 17 parquet scans).  The checkpoint is
     # batch-sized and 4 narrow columns, so the memory trade is the
     # operator's own "daily work scales with the delta" contract.
-    n = new.select(
-        "doc_id",
-        "source",
-        F.md5("text").alias("h"),
-        F.md5(normalized_text(F.col("text"))).alias("nh"),
-    ).localCheckpoint(eager=False)
+    n = barrier(
+        new.select(
+            "doc_id",
+            "source",
+            F.md5("text").alias("h"),
+            F.md5(normalized_text(F.col("text"))).alias("nh"),
+        )
+    )
     min_h = n.groupBy("h").agg(F.min("doc_id").alias("min_id_h"))
     min_nh = n.groupBy("nh").agg(F.min("doc_id").alias("min_id_nh"))
     j = (
@@ -1186,7 +1118,7 @@ def semantic_dedup(
                 f"SemDeDup uses ~1e5 clusters at web scale) or the bound"
             )
     # integer dot/norms behind a generator barrier (one eval per row, not
-    # one per downstream reference — see _tokens_materialized)
+    # one per downstream reference — see columns.with_tokens)
     stats = (
         f"named_struct("
         f"'dot', aggregate(zip_with(qv, cv, (x, y) -> x * y), 0L, (a, v) -> a + v), "

@@ -15,12 +15,16 @@ from typing import Optional
 
 from pyspark.sql import SparkSession
 
+# Rows are whole documents, so Arrow batches stay modest to bound
+# Python-worker memory against the oversized-doc tail; 256 measured
+# fastest (64 pays per-batch pandas overhead, 1024 is GC-erratic).
+ARROW_MAX_RECORDS_PER_BATCH = 256
+
 
 def get_spark(
     app_name: str = "tei-chunker-spark",
     master: Optional[str] = None,
     shuffle_partitions: Optional[int] = None,
-    arrow_batch: int = 256,
     max_partition_bytes: str = "32m",
 ) -> SparkSession:
     builder = SparkSession.builder.appName(app_name)
@@ -51,14 +55,13 @@ def get_spark(
         # Scale-neutral by construction: at production sizes no
         # post-shuffle partition is anywhere near 64k, so the floor never
         # binds — it only matters exactly when bytes-per-partition is tiny
-        # relative to compute, which is the regime it fixes.  Env-tunable
-        # for clusters that want the stock floor back.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("TEI_AQE_MIN_PARTITION_SIZE", "64k"),
-        )
+        # relative to compute, which is the regime it fixes.
+        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(arrow_batch))
+        .config(
+            "spark.sql.execution.arrow.maxRecordsPerBatch",
+            str(ARROW_MAX_RECORDS_PER_BATCH),
+        )
         .config("spark.python.worker.reuse", "true")
         # Documents are fat rows: smaller splits keep the scan stage's task
         # count >= cores even for modest file counts (at 100 TB the default

@@ -38,7 +38,7 @@ _SCHEMA_MEMO: dict[str, StructType] = {}
 # own file splits (a repartition would move real bytes for parallelism
 # the splits already provide).  Below it, the shuffle is negligible next
 # to the per-row compute it parallelizes.
-_WIDEN_CAP_BYTES = int(os.environ.get("TEI_WIDEN_CAP_BYTES", str(256 << 20)))
+_WIDEN_CAP_BYTES = 256 << 20
 
 # Row floor for widen="auto" (r7): tables whose per-row compute is CHEAP
 # relative to an exchange (one tokenize pass feeding an aggregate —
@@ -56,7 +56,7 @@ _WIDEN_CAP_BYTES = int(os.environ.get("TEI_WIDEN_CAP_BYTES", str(256 << 20)))
 # doc_top_terms 0.94/3.3/28.4 vs 1.21/1.70/6.9): crossover sits between
 # 20k and 100k rows, so 30k keeps the known-loss regime narrow and
 # captures the 2-4x wins above it.
-_WIDEN_MIN_ROWS = int(os.environ.get("TEI_WIDEN_MIN_ROWS", str(30_000)))
+_WIDEN_MIN_ROWS = 30_000
 _ROWS_MEMO: dict[str, int] = {}
 
 
@@ -96,8 +96,8 @@ def widen_small(
     The driver test tables are single-row-group parquet files, so every
     scan stage — and all the per-row compute fused into it — runs as ONE
     task regardless of cluster size.  For inputs small enough that the
-    round-robin shuffle is negligible (<= _WIDEN_CAP_BYTES, default
-    256 MB), repartition to cluster parallelism; for anything larger the
+    round-robin shuffle is negligible (<= _WIDEN_CAP_BYTES, 256 MB),
+    repartition to cluster parallelism; for anything larger the
     scan's own splits provide parallelism and this is a no-op.  With a
     ``rows`` hint the fan-out additionally declines below
     _WIDEN_MIN_ROWS — the regime where the exchange costs more than the

@@ -4,6 +4,8 @@ and no missing spans vs a single-shot run (BASELINE.md resumability row).
 from __future__ import annotations
 
 import pytest
+from pyspark.errors import AnalysisException
+from pyspark.sql.readwriter import DataFrameReader
 
 from tei_chunker_spark.config import ChunkerConfig, JobConfig
 from tei_chunker_spark.corpus import INPUT_SCHEMA_DDL, make_rows
@@ -172,3 +174,25 @@ def test_failed_wave_is_recorded_then_rerun_completes(spark, corpus_path, tmp_pa
     assert completed_buckets(spark, manifest, "f") == list(range(JOB.num_buckets))
     assert {r.status for r in latest.values()} == {"done"}
     assert {latest[b].attempt for b in (0, 1, 2)} == {2}
+
+
+@pytest.mark.parametrize(
+    "error",
+    [OSError("transient listing failure"), AnalysisException("unreadable manifest")],
+    ids=["io", "analysis"],
+)
+def test_manifest_read_error_is_not_first_run(spark, corpus_path, tmp_path, monkeypatch, error):
+    """Only a missing manifest path means "first run".  Any other read
+    error must stop the job: read as "no manifest", it would restart at
+    attempt 1 and reprocess every bucket."""
+    manifest = str(tmp_path / "manifest")
+    read_parquet = DataFrameReader.parquet
+
+    def failing_read(self, *paths, **options):
+        if manifest in paths:
+            raise error
+        return read_parquet(self, *paths, **options)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", failing_read)
+    with pytest.raises(type(error)):
+        run_resumable(spark, corpus_path, str(tmp_path / "out"), manifest, JOB, job_id="e")

@@ -352,3 +352,58 @@ def test_manifest_observations_in_write_result_stage(spark, corpus_path, tmp_pat
         # the exchange is the only stage boundary, so everything above it
         # runs in the write's result stage
         assert write[0] < min(metrics) and max(metrics) < exchanges[0]
+
+
+def _optimized_plan(df) -> str:
+    return df._jdf.queryExecution().optimizedPlan().toString()
+
+
+@pytest.fixture(scope="module")
+def documents_path(spark, tmp_path_factory):
+    path = str(tmp_path_factory.mktemp("plans") / "documents")
+    rows = [(i, f"shared header w{i % 5} body {i} text \n") for i in range(40)]
+    spark.createDataFrame(rows, "doc_id long, text string").write.parquet(path)
+    return path
+
+
+@pytest.mark.parametrize(
+    "consumer, splits",
+    [
+        ("doc_stats", 1),
+        ("shingle_table", 1),
+        ("corpus_ngram_counts", 1),
+        # the segment table feeds both the corpus df aggregate and the
+        # per-doc join: two scans of the text, each split once
+        ("boilerplate_stats", 2),
+        ("cdc_segment_census", 1),
+        ("substring_dup_spans", 1),
+    ],
+)
+def test_tokenize_splits_text_once_per_scan(spark, documents_path, monkeypatch, consumer, splits):
+    """Every tokenizing operator splits the text behind the one generator
+    barrier (columns.with_tokens).  Re-inlined, projection collapsing
+    substitutes the split into each size/element_at reference and the
+    count of ``split(`` grows with n (the 10-30x re-split pathology).
+    Tables materialized by ``barrier`` hide their lineage from the final
+    plan, so the plan of every frame handed to it is counted too."""
+    from tei_chunker_spark.functions import columns
+    from tei_chunker_spark.operators import corpusops, dedup, textstats
+
+    staged = []
+
+    def recording_barrier(df, eager=False):
+        staged.append(df)
+        return columns.barrier(df, eager)
+
+    for mod in (dedup, corpusops):
+        monkeypatch.setattr(mod, "barrier", recording_barrier)
+    build = {
+        "doc_stats": textstats.doc_stats,
+        "shingle_table": lambda d: dedup.shingle_table(d, 2),
+        "corpus_ngram_counts": lambda d: corpusops.corpus_ngram_counts(d, 3),
+        "boilerplate_stats": corpusops.boilerplate_stats,
+        "cdc_segment_census": corpusops.cdc_segment_census,
+        "substring_dup_spans": dedup.substring_dup_spans,
+    }[consumer]
+    out = build(spark.read.parquet(documents_path))
+    assert sum(_optimized_plan(df).count("split(") for df in [*staged, out]) == splits

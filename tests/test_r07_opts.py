@@ -7,6 +7,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from tei_chunker_spark.functions.columns import barrier
 from tei_chunker_spark.operators import dedup
 from tei_chunker_spark.sources.tables import widen_small
 
@@ -23,7 +24,7 @@ def _docs(spark, n=60):
 def test_jaccard_sizes_param_matches_internal_aggregate(spark):
     """jaccard_pairs(sizes=...) (the minhash fused-aggregate path) must
     equal the internal sizes computation."""
-    sh = dedup.shingle_table(_docs(spark), 2).localCheckpoint(eager=False)
+    sh = barrier(dedup.shingle_table(_docs(spark), 2))
     sig = dedup.minhash_signatures_from(sh, with_size=True)
     base = sorted(
         map(tuple, dedup.jaccard_pairs(sh, threshold=0.3).collect())
