@@ -63,12 +63,12 @@ _FLAGSHIP_JOB = JobConfig(
 
 # For pipelines fed by _interleaved_corpus: the generator's own
 # round-robin repartition already distributes documents uniformly across
-# cluster parallelism, so the salt exchange inside extract_pipeline would
+# cluster parallelism, so the doc_id exchange inside extract_pipeline would
 # re-shuffle an ALREADY uniformly spread corpus for nothing (guide §2.4
-# "remove shuffles outright" — valid at any scale: round-robin IS the
-# anti-skew distribution the salt exists to approximate).  Outputs are
-# identical either way (assume_bucketed_input is a physical-plan knob,
-# config.py:55-61); file-fed pipelines keep the salt shuffle.
+# "remove shuffles outright" — valid at any scale: round-robin spreads
+# documents as evenly as hashing doc_id does).  Outputs are identical
+# either way (assume_bucketed_input is a physical-plan knob, see
+# config.JobConfig); file-fed pipelines keep the doc_id shuffle.
 _FLAGSHIP_JOB_PRESPREAD = JobConfig(
     chunker=ChunkerConfig(max_chunk_size=500, overlap_size=50),
     shuffle_partitions=32,

@@ -102,16 +102,17 @@ def dry_run(spark, n_docs: int = 200) -> int:
     from tei_chunker_spark.config import ChunkerConfig, JobConfig
     from tei_chunker_spark.corpus import corpus_df
     from tei_chunker_spark.functions.columns import barrier
-    from tei_chunker_spark.operators.extract import extract_pipeline, salt_column
+    from tei_chunker_spark.operators.extract import extract_pipeline
 
     job_ice = e2e_job(BUCKETS)
     # Stand-in for the Iceberg bucket(P, doc_id) layout: pre-partition on
-    # the same salt so assume_bucketed_input's alignment premise holds.
+    # doc_id so assume_bucketed_input's premise (rows laid out by document)
+    # holds.
     # Materialized eagerly so the stand-in's own repartition is not part of
     # the plan under inspection (on a real cluster the layout lives in the
     # table, not the query).
     docs = barrier(
-        corpus_df(spark, n_docs).repartition(BUCKETS, salt_column(BUCKETS)),
+        corpus_df(spark, n_docs).repartition(BUCKETS, "doc_id"),
         eager=True,
     )
     # Format knobs steer the scan/sink only; the pipeline between them is

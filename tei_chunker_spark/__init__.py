@@ -3,7 +3,7 @@
 A from-scratch, Spark-first re-expression of the computational semantics of
 dmarx/tei-chunker (GROBID TEI XML -> hierarchical chunks), built as a
 one-shuffle DataFrame pipeline over tables of interleaved text+media
-documents: Scan -> Project -> salted Exchange -> MapInPandas -> Sink, with a
+documents: Scan -> Project -> doc_id Exchange -> MapInPandas -> Sink, with a
 checkpoint manifest for resume and per-partition lineage/metrics.
 """
 

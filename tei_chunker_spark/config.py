@@ -34,12 +34,17 @@ class ChunkerConfig:
 class JobConfig:
     """Execution knobs. Changing these must NOT change outputs.
 
-    num_buckets is the salt-bucket count used both for the shuffle
-    (repartition key = pmod(xxhash64(doc_id), num_buckets * partitions_per_bucket))
-    and for the checkpoint/resume granularity of the manifest.  At 100 TB /
-    10^12 docs you would raise num_buckets into the thousands so a resume
-    skips completed work at fine granularity; locally small values keep test
+    num_buckets is the checkpoint/resume granularity of the manifest:
+    bucket = pmod(xxhash64(doc_id), num_buckets).  At 100 TB / 10^12 docs
+    you would raise num_buckets into the thousands so a resume skips
+    completed work at fine granularity; locally small values keep test
     jobs fast.
+
+    shuffle_partitions is an upper bound on Python tasks per stage: the
+    extraction exchange hashes doc_id into min(shuffle_partitions,
+    defaultParallelism) partitions, because every Python task pays a fixed
+    worker set-up fee and a second round of tasks on a slot buys no
+    parallelism.
     """
 
     chunker: ChunkerConfig = field(default_factory=ChunkerConfig)
@@ -47,10 +52,10 @@ class JobConfig:
     shuffle_partitions: int = 64
     input_format: str = "parquet"  # "iceberg" on a real cluster
     output_format: str = "parquet"
-    # When the input table is already bucketed by pmod(xxhash64(doc_id), P)
-    # (Iceberg `bucket(P, doc_id)` partitioning — the recommended layout at
-    # 10^12 docs), the salt repartition is a no-op shuffle of ~all input
-    # bytes; set True to elide it and run the Python stage directly on the
-    # aligned scan partitions. Outputs are identical either way (pinned by
+    # When the input table is already laid out by document (Iceberg
+    # `bucket(P, doc_id)` partitioning — the recommended layout at 10^12
+    # docs), the doc_id repartition is a shuffle of ~all input bytes that
+    # buys nothing; set True to elide it and run the Python stage directly
+    # on the scan partitions. Outputs are identical either way (pinned by
     # tests); this is purely a physical-plan decision.
     assume_bucketed_input: bool = False

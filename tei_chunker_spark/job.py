@@ -74,7 +74,13 @@ def main(argv=None) -> None:
     ap.add_argument("--max-chunk-size", type=int, default=20000)
     ap.add_argument("--overlap-size", type=int, default=200)
     ap.add_argument("--num-buckets", type=int, default=16)
-    ap.add_argument("--shuffle-partitions", type=int, default=64)
+    ap.add_argument(
+        "--shuffle-partitions",
+        type=int,
+        default=64,
+        help="upper bound on Python tasks per stage (the extraction exchange "
+        "uses min(this, task slots) partitions)",
+    )
     ap.add_argument("--wave-size", type=int, default=8)
     ap.add_argument("--input-format", default="parquet")
     ap.add_argument("--master", default=None)

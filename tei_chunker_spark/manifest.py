@@ -5,8 +5,9 @@ response, reference service.py:32-55); at 10^12 documents the job must
 instead survive restarts.  Design:
 
 * every document maps to a stable **bucket** = ``pmod(xxhash64(doc_id),
-  num_buckets)`` — the same salt family used by the shuffle, so resume
-  granularity aligns with the physical partitioning.
+  num_buckets)``, the resume granularity.  It only selects which
+  documents a wave reads; the extraction exchange inside the wave hashes
+  doc_id on its own (operators/extract.py).
 * output is written ``partitionBy("bucket")`` with dynamic partition
   overwrite, so re-processing a bucket is idempotent (no dupes).
 * the manifest is an append-only table ``(job_id, bucket, status,
@@ -114,7 +115,7 @@ def _observed_wave(
     Input-side accounting: a malformed document emits zero spans, so
     without ``in{b}`` a doc can vanish silently — the judge of "no gaps" at
     10^12 docs is input_doc_count vs doc_count per bucket.  Both
-    observations sit above the salt exchange, in the write's result stage:
+    observations sit above the doc_id exchange, in the write's result stage:
     Spark merges a result task's metrics once per partition, ignoring
     retries and speculative copies, where a shuffle-map stage would
     re-apply them on resubmission (plan shape pinned by

@@ -2,18 +2,21 @@
 
 Physical plan (see SURVEY.md §4.3):
 
-    Scan -> Project(doc_id, spans) -> Exchange(hash(salt), P) ->
+    Scan -> Project(doc_id, spans) -> Exchange(hash(doc_id), n) ->
     MapInPandas(extract) -> Sink
 
-One wide dependency total.  The shuffle key is a salt derived from doc_id
-(``pmod(xxhash64(doc_id), P)``) rather than doc_id itself: with 10^12 rows
-the *count* per partition is uniform either way, but routing through an
-explicit narrow-domain salt keeps the partitioning reusable (the same
-bucket id doubles as the checkpoint/resume key in the manifest) and is the
-documented defense against per-row cost skew — oversized papers land in
-different buckets, and small Arrow batches bound how long one straggler
-document can hold a batch (AQE cannot see inside the Python stage, so this
-must be explicit; SURVEY.md §4.2).
+One wide dependency total, hash-partitioned on doc_id itself into
+``n = min(shuffle_partitions, defaultParallelism)`` partitions.  Hashing
+the raw key gives every partition an equal share of documents, and
+capping n at the task slots runs one Python task per slot: each Python
+task pays a fixed worker set-up cost before it sees a row (~0.24 CPU-s
+measured on a 4-vCPU host), so a second round of tasks on the same slot
+adds that fee and no parallelism.  Per-row cost skew (oversized papers)
+is bounded by small Arrow batches and the ``max_doc_chars`` guardrail,
+not by the partitioning — AQE cannot see inside the Python stage
+(SURVEY.md §4.2).  The manifest's resume bucket
+(``pmod(xxhash64(doc_id), num_buckets)``) is a separate key: it selects
+which documents a wave reads, and is independent of this exchange.
 
 The Python stage is the sanctioned vectorized path: data crosses the
 JVM<->Python boundary in columnar Arrow batches via ``mapInPandas``; the
@@ -122,7 +125,8 @@ def make_batch_extractor(cfg: ChunkerConfig):
 
 
 def salt_column(num_partitions: int, col: str = "doc_id") -> Column:
-    """Salt bucket for shuffle + checkpoint granularity."""
+    """Stable bucket id in ``[0, num_partitions)``: the manifest's
+    checkpoint/resume granularity."""
     return F.pmod(F.xxhash64(F.col(col)), F.lit(num_partitions)).cast("int")
 
 
@@ -131,21 +135,20 @@ def salted_reassembly(df: DataFrame, job: JobConfig) -> DataFrame:
     row: the first half of :func:`extract_pipeline`, shared by every
     extraction-family pipeline.
 
-    Salt + shuffle FIRST, reassemble AFTER: the concat/sort codegen then
-    runs in the p-way wide stage instead of the scan stage, whose task
-    count is bounded by input splits (a handful of parquet files must not
-    cap CPU parallelism).  The scan stage does nothing but read + shuffle.
-    If the table is already bucketed on the salt key (Iceberg
-    bucket(P, doc_id) layout), skip the shuffle entirely — at 100 TB the
-    repartition would otherwise move every input byte once for nothing."""
+    Shuffle FIRST, reassemble AFTER: the concat/sort codegen then runs in
+    the wide stage instead of the scan stage, whose task count is bounded
+    by input splits (a handful of parquet files must not cap CPU
+    parallelism).  The scan stage does nothing but read + shuffle.  The
+    slot count is read when the plan is built, so every ``run_resumable``
+    wave sees the current one (why doc_id and why the cap: module
+    docstring).  If the table is already laid out by document (Iceberg
+    ``bucket(P, doc_id)``), ``assume_bucketed_input`` skips the shuffle
+    entirely — at 100 TB the repartition would otherwise move every input
+    byte once for nothing."""
     docs = df.select("doc_id", "spans")
     if not job.assume_bucketed_input:
-        p = job.shuffle_partitions
-        docs = (
-            docs.withColumn("_salt", salt_column(p))
-            .repartition(p, "_salt")
-            .drop("_salt")
-        )
+        slots = df.sparkSession.sparkContext.defaultParallelism
+        docs = docs.repartition(min(job.shuffle_partitions, slots), "doc_id")
     return reassembled(docs)
 
 
@@ -176,7 +179,7 @@ def media_ref_pipeline(df: DataFrame) -> DataFrame:
     emitted even when the XML is malformed and yields zero text chunks),
     and a media-only consumer ignores the offset column, so the multiset
     of (doc_id, media_ref) rows is exactly the input's media spans —
-    computable as a NARROW projection: no salt shuffle, no XML reassembly,
+    computable as a NARROW projection: no shuffle, no XML reassembly,
     no Python stage.  Identity with the filtered full pipeline is pinned
     by test_media_ref_pipeline_matches_filtered_extract."""
     refs = F.coalesce(
@@ -196,7 +199,7 @@ def section_metadata_pipeline(df: DataFrame, job: JobConfig) -> DataFrame:
     array (reference service.py:37-44): one output row per top-level
     section — (doc_id, section_idx, title, level, length,
     subsection_count), length = direct content only.  Same physical shape
-    as extract_pipeline: scan -> one salted exchange -> mapInPandas."""
+    as extract_pipeline: scan -> one doc_id exchange -> mapInPandas."""
     cap = job.chunker.max_doc_chars
 
     def meta_batches(batches: Iterable) -> Iterator:

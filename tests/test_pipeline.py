@@ -161,6 +161,44 @@ def test_salting_distribution(spark):
     assert max(counts) < 3 * min(counts)  # no gross imbalance at n=400
 
 
+@pytest.mark.parametrize("p", [2, 8])
+def test_exchange_fills_every_partition(spark, p):
+    """Every partition of the extraction exchange carries documents, in
+    near-equal shares.  Hashing a salt that is already pmod(hash, p) a
+    second time leaves ~40% of the p partitions empty (p=2 -> 1, p=8 -> 5),
+    each still launching a Python task for nothing."""
+    from pyspark.sql import functions as F
+
+    from tei_chunker_spark.operators.extract import salted_reassembly
+
+    rows = make_rows([f"o{i}" for i in range(400)])
+    docs = salted_reassembly(_input_df(spark, rows), JobConfig(shuffle_partitions=p))
+    counts = [
+        r.n
+        for r in docs.groupBy(F.spark_partition_id().alias("pid"))
+        .agg(F.count("*").alias("n"))
+        .collect()
+    ]
+    assert len(counts) == p
+    assert sum(counts) == 400
+    assert max(counts) < 2 * min(counts)
+
+
+@pytest.mark.parametrize("pipeline", ["extract", "sections"])
+def test_python_tasks_capped_at_slots(spark, pipeline):
+    """shuffle_partitions is an upper bound on Python tasks per stage:
+    never more tasks than task slots, fewer when asked."""
+    from tei_chunker_spark.operators.extract import section_metadata_pipeline
+
+    fn = extract_pipeline if pipeline == "extract" else section_metadata_pipeline
+    df = _input_df(spark, make_rows([f"t{i}" for i in range(40)]))
+    slots = spark.sparkContext.defaultParallelism
+    wide = fn(df, JobConfig(chunker=JOB.chunker, shuffle_partitions=64))
+    assert wide.rdd.getNumPartitions() == slots
+    narrow = fn(df, JobConfig(chunker=JOB.chunker, shuffle_partitions=3))
+    assert narrow.rdd.getNumPartitions() == 3
+
+
 def test_physical_plan_shape(spark):
     """One shuffle, one Python stage, pruned scan: the 100 TB plan."""
     from pyspark.sql import functions as F

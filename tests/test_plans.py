@@ -36,7 +36,7 @@ def corpus_path(spark, tmp_path_factory):
 def test_extract_pipeline_single_shuffle_and_pruned_scan(spark, corpus_path):
     df = spark.read.parquet(corpus_path)
     spans = extract_pipeline(df, JOB)
-    assert count_exchanges(spans) == 1  # exactly the salt repartition
+    assert count_exchanges(spans) == 1  # exactly the doc_id repartition
     assert "MapInPandas" in executed_plan(spans)
     schemas = scan_read_schemas(spans)
     assert schemas, "no scan found"
@@ -204,6 +204,23 @@ def test_section_pipeline_single_shuffle(spark, corpus_path):
     secs = section_metadata_pipeline(df, JOB)
     assert count_exchanges(secs) == 1
     assert "MapInPandas" in executed_plan(secs)
+
+
+def test_extract_exchange_hashes_doc_id(spark, corpus_path):
+    """The extraction exchange hashes doc_id itself into min(shuffle
+    partitions, slots) partitions; no salt column is computed and then
+    hashed a second time."""
+    import re
+
+    from tei_chunker_spark.operators.extract import section_metadata_pipeline
+
+    df = spark.read.parquet(corpus_path)
+    job = JobConfig(chunker=JOB.chunker, shuffle_partitions=64)
+    n = min(job.shuffle_partitions, spark.sparkContext.defaultParallelism)
+    for out in (extract_pipeline(df, job), section_metadata_pipeline(df, job)):
+        plan = executed_plan(out)
+        assert re.search(rf"hashpartitioning\(doc_id#\d+, {n}\)", plan), plan
+        assert "_salt" not in plan
 
 
 def test_ann_ranking_is_two_stage_topk(spark):
