@@ -40,11 +40,11 @@ class JobConfig:
     completed work at fine granularity; locally small values keep test
     jobs fast.
 
-    shuffle_partitions is an upper bound on Python tasks per stage: the
-    extraction exchange hashes doc_id into min(shuffle_partitions,
-    defaultParallelism) partitions, because every Python task pays a fixed
-    worker set-up fee and a second round of tasks on a slot buys no
-    parallelism.
+    shuffle_partitions is the number of Python tasks per extraction stage
+    (the partitions of the doc_id exchange).  In local mode it is an upper
+    bound, capped at the slot count: every Python task pays a fixed worker
+    set-up fee and a second round of tasks on a slot buys no parallelism
+    (operators/extract.py::python_tasks).
     """
 
     chunker: ChunkerConfig = field(default_factory=ChunkerConfig)

@@ -11,8 +11,8 @@ Because every row is a pure function of (doc_id, profile), generation can
 run distributed (mapInPandas over ``spark.range``) and is reproducible at
 any scale — the property that lets the sandbox stand in for the 10^12-doc
 Iceberg corpus.  The size distribution is log-normal-ish with a deliberate
-1% tail of oversized documents (~20-40x median) to exercise the skew/
-salting path, and ~1% malformed documents to exercise the error path.
+1% tail of oversized documents (~20-40x median) to exercise the skew
+path, and ~1% malformed documents to exercise the error path.
 
 CLI: ``python -m tei_chunker_spark.corpus --out /tmp/corpus --docs 2000``
 """

@@ -78,8 +78,8 @@ def main(argv=None) -> None:
         "--shuffle-partitions",
         type=int,
         default=64,
-        help="upper bound on Python tasks per stage (the extraction exchange "
-        "uses min(this, task slots) partitions)",
+        help="Python tasks per extraction stage; in local mode an upper "
+        "bound, capped at the task slots",
     )
     ap.add_argument("--wave-size", type=int, default=8)
     ap.add_argument("--input-format", default="parquet")

@@ -5,9 +5,11 @@ response, reference service.py:32-55); at 10^12 documents the job must
 instead survive restarts.  Design:
 
 * every document maps to a stable **bucket** = ``pmod(xxhash64(doc_id),
-  num_buckets)``, the resume granularity.  It only selects which
-  documents a wave reads; the extraction exchange inside the wave hashes
-  doc_id on its own (operators/extract.py).
+  num_buckets)``, the resume granularity.  It selects which documents a
+  wave reads, and the wave's exchange gives each Python task a
+  contiguous run of the wave's buckets
+  (``operators/extract.py::wave_partition_id``), so the write below
+  stays near one file per task.
 * output is written ``partitionBy("bucket")`` with dynamic partition
   overwrite, so re-processing a bucket is idempotent (no dupes).
 * the manifest is an append-only table ``(job_id, bucket, status,
@@ -38,7 +40,7 @@ from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .config import JobConfig
-from .operators.extract import chunk_stage, salted_reassembly, salt_column
+from .operators.extract import bucket_column, chunk_stage, shuffled_reassembly
 from .sources.session import ARROW_MAX_RECORDS_PER_BATCH
 
 _log = logging.getLogger(__name__)
@@ -115,14 +117,14 @@ def _observed_wave(
     Input-side accounting: a malformed document emits zero spans, so
     without ``in{b}`` a doc can vanish silently — the judge of "no gaps" at
     10^12 docs is input_doc_count vs doc_count per bucket.  Both
-    observations sit above the doc_id exchange, in the write's result stage:
+    observations sit above the wave's exchange, in the write's result stage:
     Spark merges a result task's metrics once per partition, ignoring
     retries and speculative copies, where a shuffle-map stage would
     re-apply them on resubmission (plan shape pinned by
     tests/test_plans.py)."""
-    bucket = salt_column(job.num_buckets)
+    bucket = bucket_column(job.num_buckets)
     seen, emitted = Observation(), Observation()
-    docs = salted_reassembly(input_df.filter(bucket.isin(list(wave))), job).observe(
+    docs = shuffled_reassembly(input_df.filter(bucket.isin(list(wave))), job, wave).observe(
         seen, *_count_per_bucket(wave, "in", bucket)
     )
     out_bucket = F.col("bucket")

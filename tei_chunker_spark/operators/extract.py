@@ -5,18 +5,18 @@ Physical plan (see SURVEY.md §4.3):
     Scan -> Project(doc_id, spans) -> Exchange(hash(doc_id), n) ->
     MapInPandas(extract) -> Sink
 
-One wide dependency total, hash-partitioned on doc_id itself into
-``n = min(shuffle_partitions, defaultParallelism)`` partitions.  Hashing
-the raw key gives every partition an equal share of documents, and
-capping n at the task slots runs one Python task per slot: each Python
-task pays a fixed worker set-up cost before it sees a row (~0.24 CPU-s
-measured on a 4-vCPU host), so a second round of tasks on the same slot
-adds that fee and no parallelism.  Per-row cost skew (oversized papers)
-is bounded by small Arrow batches and the ``max_doc_chars`` guardrail,
-not by the partitioning — AQE cannot see inside the Python stage
-(SURVEY.md §4.2).  The manifest's resume bucket
-(``pmod(xxhash64(doc_id), num_buckets)``) is a separate key: it selects
-which documents a wave reads, and is independent of this exchange.
+One wide dependency total, hash-partitioned on doc_id itself, so every
+partition gets an equal share of documents.  Each Python task pays a
+fixed worker set-up cost before it sees a row (~0.24 CPU-s measured on a
+4-vCPU host), so in local mode, where the slot count is fixed, the
+exchange has ``min(shuffle_partitions, defaultParallelism)`` partitions:
+one Python task per slot.  On a cluster it has ``shuffle_partitions``
+(see :func:`python_tasks`).  A manifest wave lays its buckets out in
+contiguous runs of partitions instead (:func:`wave_partition_id`), so
+its ``partitionBy("bucket")`` write stays near one file per task.
+Small Arrow batches bound the size of one batch and ``max_doc_chars``
+bounds one document's cost; neither balances work across tasks, and AQE
+cannot see inside the Python stage (SURVEY.md §4.2).
 
 The Python stage is the sanctioned vectorized path: data crosses the
 JVM<->Python boundary in columnar Arrow batches via ``mapInPandas``; the
@@ -26,9 +26,9 @@ but there is no row-at-a-time ``udf()`` anywhere.
 """
 from __future__ import annotations
 
-from typing import Iterable, Iterator
+from typing import Iterable, Iterator, Optional, Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import ChunkerConfig, JobConfig
@@ -124,13 +124,50 @@ def make_batch_extractor(cfg: ChunkerConfig):
     return extract_batches
 
 
-def salt_column(num_partitions: int, col: str = "doc_id") -> Column:
-    """Stable bucket id in ``[0, num_partitions)``: the manifest's
+def bucket_column(num_buckets: int, col: str = "doc_id") -> Column:
+    """Stable bucket id in ``[0, num_buckets)``: the manifest's
     checkpoint/resume granularity."""
-    return F.pmod(F.xxhash64(F.col(col)), F.lit(num_partitions)).cast("int")
+    return F.pmod(F.xxhash64(F.col(col)), F.lit(num_buckets)).cast("int")
 
 
-def salted_reassembly(df: DataFrame, job: JobConfig) -> DataFrame:
+def python_tasks(spark: SparkSession, job: JobConfig) -> int:
+    """Partitions of the extraction exchange, i.e. Python tasks per stage.
+
+    In local mode the slot count is fixed by the master URL, and a second
+    round of tasks on a slot adds the per-task worker fee and no
+    parallelism, so the count is capped at ``defaultParallelism``.  On a
+    cluster ``shuffle_partitions`` is used as given: under dynamic
+    allocation, or before executors register, ``defaultParallelism``
+    reads 2 and would starve the stage (pending tasks are what scale
+    executors up), and at cluster scale the fee is small next to a task's
+    work while extra task rounds let fast slots absorb straggler
+    partitions."""
+    sc = spark.sparkContext
+    if sc.master.startswith("local"):
+        return min(job.shuffle_partitions, sc.defaultParallelism)
+    return job.shuffle_partitions
+
+
+def wave_partition_id(wave: Sequence[int], num_buckets: int, n: int) -> Column:
+    """Partition id in ``[0, n)`` that lays the buckets of one manifest
+    wave out in order: a document sits at ``i + u`` on the line
+    ``[0, len(wave))``, where ``i`` is its bucket's index in the wave and
+    ``u`` in ``[0, 1)`` comes from a second, independent hash of doc_id;
+    partition ``j`` takes the ``j``-th of ``n`` equal segments.  Shares
+    stay equal (buckets are equal-sized hash classes), and each partition
+    holds a contiguous run of buckets, so a ``partitionBy("bucket")``
+    write produces at most ``n + len(wave) - 1`` files, where hashing
+    doc_id alone puts every bucket in every partition
+    (``n * len(wave)``)."""
+    scale = 1 << 20
+    index = F.array_position(F.array(*[F.lit(b) for b in wave]), bucket_column(num_buckets)) - 1
+    line = index + F.pmod(F.hash("doc_id"), F.lit(scale)) / scale
+    return F.floor(line * n / len(wave)).cast("int")
+
+
+def shuffled_reassembly(
+    df: DataFrame, job: JobConfig, wave: Optional[Sequence[int]] = None
+) -> DataFrame:
     """documents(doc_id, spans) -> (doc_id, xml, media), one row per input
     row: the first half of :func:`extract_pipeline`, shared by every
     extraction-family pipeline.
@@ -139,16 +176,20 @@ def salted_reassembly(df: DataFrame, job: JobConfig) -> DataFrame:
     the wide stage instead of the scan stage, whose task count is bounded
     by input splits (a handful of parquet files must not cap CPU
     parallelism).  The scan stage does nothing but read + shuffle.  The
-    slot count is read when the plan is built, so every ``run_resumable``
-    wave sees the current one (why doc_id and why the cap: module
-    docstring).  If the table is already laid out by document (Iceberg
-    ``bucket(P, doc_id)``), ``assume_bucketed_input`` skips the shuffle
-    entirely — at 100 TB the repartition would otherwise move every input
-    byte once for nothing."""
+    task count is read when the plan is built, so every ``run_resumable``
+    wave sees the current one.  ``wave`` (the manifest buckets the input
+    is filtered to) selects the bucket-ordered layout of
+    :func:`wave_partition_id` over a plain doc_id hash.  If the table is
+    already laid out by document (Iceberg ``bucket(P, doc_id)``),
+    ``assume_bucketed_input`` skips the shuffle entirely — at 100 TB the
+    repartition would otherwise move every input byte once for nothing."""
     docs = df.select("doc_id", "spans")
     if not job.assume_bucketed_input:
-        slots = df.sparkSession.sparkContext.defaultParallelism
-        docs = docs.repartition(min(job.shuffle_partitions, slots), "doc_id")
+        n = python_tasks(df.sparkSession, job)
+        if wave is None:
+            docs = docs.repartition(n, "doc_id")
+        else:
+            docs = docs.repartitionById(n, wave_partition_id(wave, job.num_buckets, n))
     return reassembled(docs)
 
 
@@ -164,7 +205,7 @@ def extract_pipeline(df: DataFrame, job: JobConfig) -> DataFrame:
     Output row order within a document is the semantic ``offset``; global
     order is undefined (it's a distributed table — verification sorts).
     """
-    return chunk_stage(salted_reassembly(df, job), job.chunker)
+    return chunk_stage(shuffled_reassembly(df, job), job.chunker)
 
 
 def media_ref_pipeline(df: DataFrame) -> DataFrame:
@@ -231,7 +272,7 @@ def section_metadata_pipeline(df: DataFrame, job: JobConfig) -> DataFrame:
     # media array, and the projection lets Catalyst prune the media
     # filter/transform out of the plan AND off the Arrow wire.
     return (
-        salted_reassembly(df, job)
+        shuffled_reassembly(df, job)
         .select("doc_id", "xml")
         .mapInPandas(meta_batches, SECTION_SCHEMA_DDL)
     )

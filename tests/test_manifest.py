@@ -94,7 +94,7 @@ def test_manifest_counts_exact_per_bucket(spark, tmp_path):
     empty or NULL span arrays) so input_doc_count > doc_count."""
     from pyspark.sql import functions as F
 
-    from tei_chunker_spark.operators.extract import salt_column
+    from tei_chunker_spark.operators.extract import bucket_column
 
     rows = make_rows([f"x{i}" for i in range(200)])
     rows += [
@@ -122,7 +122,7 @@ def test_manifest_counts_exact_per_bucket(spark, tmp_path):
     nb = job.num_buckets
     inputs = {
         r.bucket: r.n
-        for r in spark.read.parquet(corpus).groupBy(salt_column(nb).alias("bucket"))
+        for r in spark.read.parquet(corpus).groupBy(bucket_column(nb).alias("bucket"))
         .agg(F.count(F.lit(1)).alias("n")).collect()
     }
     outputs = {
@@ -138,6 +138,26 @@ def test_manifest_counts_exact_per_bucket(spark, tmp_path):
         assert r.input_doc_count == inputs.get(b, 0), b
         assert (r.doc_count, r.span_count) == outputs.get(b, (0, 0)), b
     assert any(r.input_doc_count > r.doc_count for r in latest.values())
+
+
+def test_wave_write_files_bounded(spark, corpus_path, tmp_path):
+    """Each wave's partitionBy("bucket") write produces at most
+    n + wave_size - 1 files (n = Python tasks): every task takes a
+    contiguous run of the wave's buckets.  A plain doc_id hash puts every
+    bucket in every task, up to n * wave_size files per wave."""
+    import glob
+
+    from tei_chunker_spark.operators.extract import python_tasks
+
+    out = str(tmp_path / "out")
+    wave_size = 4
+    run_resumable(spark, corpus_path, out, str(tmp_path / "m"), JOB,
+                  job_id="files", wave_size=wave_size)
+    n = python_tasks(spark, JOB)
+    waves = JOB.num_buckets // wave_size
+    files = glob.glob(f"{out}/bucket=*/*.parquet")
+    assert len({f.split("/")[-2] for f in files}) == JOB.num_buckets
+    assert len(files) <= waves * (n + wave_size - 1)
 
 
 def test_rerun_completed_job_is_noop(spark, corpus_path, tmp_path):

@@ -144,15 +144,15 @@ def test_bucketed_input_elides_shuffle_same_output(spark):
 
 
 def test_salting_distribution(spark):
-    """The salt spreads documents near-uniformly across buckets so no
-    partition inherits a disproportionate share (the skew defense)."""
-    from tei_chunker_spark.operators.extract import salt_column
+    """The manifest's bucket id spreads documents near-uniformly across
+    buckets, so resume waves carry equal shares of the corpus."""
+    from tei_chunker_spark.operators.extract import bucket_column
 
     rows = make_rows([f"s{i}" for i in range(400)])
     df = _input_df(spark, rows)
     counts = [
         r.n
-        for r in df.select(salt_column(16).alias("b"))
+        for r in df.select(bucket_column(16).alias("b"))
         .groupBy("b")
         .agg(__import__("pyspark").sql.functions.count("*").alias("n"))
         .collect()
@@ -164,15 +164,14 @@ def test_salting_distribution(spark):
 @pytest.mark.parametrize("p", [2, 8])
 def test_exchange_fills_every_partition(spark, p):
     """Every partition of the extraction exchange carries documents, in
-    near-equal shares.  Hashing a salt that is already pmod(hash, p) a
-    second time leaves ~40% of the p partitions empty (p=2 -> 1, p=8 -> 5),
-    each still launching a Python task for nothing."""
+    near-equal shares: an empty partition still launches a Python task
+    and pays its worker set-up for nothing."""
     from pyspark.sql import functions as F
 
-    from tei_chunker_spark.operators.extract import salted_reassembly
+    from tei_chunker_spark.operators.extract import shuffled_reassembly
 
     rows = make_rows([f"o{i}" for i in range(400)])
-    docs = salted_reassembly(_input_df(spark, rows), JobConfig(shuffle_partitions=p))
+    docs = shuffled_reassembly(_input_df(spark, rows), JobConfig(shuffle_partitions=p))
     counts = [
         r.n
         for r in docs.groupBy(F.spark_partition_id().alias("pid"))
@@ -186,8 +185,8 @@ def test_exchange_fills_every_partition(spark, p):
 
 @pytest.mark.parametrize("pipeline", ["extract", "sections"])
 def test_python_tasks_capped_at_slots(spark, pipeline):
-    """shuffle_partitions is an upper bound on Python tasks per stage:
-    never more tasks than task slots, fewer when asked."""
+    """In local mode shuffle_partitions is an upper bound on Python tasks
+    per stage: never more tasks than task slots, fewer when asked."""
     from tei_chunker_spark.operators.extract import section_metadata_pipeline
 
     fn = extract_pipeline if pipeline == "extract" else section_metadata_pipeline
@@ -197,6 +196,49 @@ def test_python_tasks_capped_at_slots(spark, pipeline):
     assert wide.rdd.getNumPartitions() == slots
     narrow = fn(df, JobConfig(chunker=JOB.chunker, shuffle_partitions=3))
     assert narrow.rdd.getNumPartitions() == 3
+
+
+@pytest.mark.parametrize(
+    "master, tasks", [("local[2]", 2), ("yarn", 64), ("spark://h:7077", 64), ("k8s://https://h", 64)]
+)
+def test_python_tasks_capped_only_in_local_mode(master, tasks):
+    """On a cluster defaultParallelism reads 2 under dynamic allocation or
+    before executors register; capping there would run a whole stage in
+    2 tasks, so shuffle_partitions is used as given."""
+    from types import SimpleNamespace
+
+    from tei_chunker_spark.operators.extract import python_tasks
+
+    session = SimpleNamespace(sparkContext=SimpleNamespace(master=master, defaultParallelism=2))
+    assert python_tasks(session, JobConfig(shuffle_partitions=64)) == tasks
+
+
+@pytest.mark.parametrize("n", [3, 256])
+def test_wave_layout_bounds_files_per_wave(spark, n):
+    """wave_partition_id gives each of n partitions a near-equal share of
+    a manifest wave and a contiguous run of its buckets: at most
+    n + len(wave) - 1 (partition, bucket) cells, i.e. files in the wave's
+    partitionBy("bucket") write."""
+    from collections import Counter
+
+    from pyspark.sql import functions as F
+
+    from tei_chunker_spark.operators.extract import bucket_column, wave_partition_id
+
+    wave = list(range(8, 16))
+    docs = spark.range(80000).select(F.concat(F.lit("w"), F.col("id").cast("string")).alias("doc_id"))
+    cells = (
+        docs.filter(bucket_column(16).isin(wave))
+        .groupBy(wave_partition_id(wave, 16, n).alias("pid"), bucket_column(16).alias("b"))
+        .count()
+        .collect()
+    )
+    per_pid = Counter()
+    for r in cells:
+        per_pid[r.pid] += r["count"]
+    assert sorted(per_pid) == list(range(n))
+    assert len(cells) <= n + len(wave) - 1
+    assert max(per_pid.values()) < 2 * min(per_pid.values())
 
 
 def test_physical_plan_shape(spark):

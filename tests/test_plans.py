@@ -207,16 +207,15 @@ def test_section_pipeline_single_shuffle(spark, corpus_path):
 
 
 def test_extract_exchange_hashes_doc_id(spark, corpus_path):
-    """The extraction exchange hashes doc_id itself into min(shuffle
-    partitions, slots) partitions; no salt column is computed and then
-    hashed a second time."""
+    """The extraction exchange hashes doc_id itself into python_tasks()
+    partitions; no derived key column sits in front of it."""
     import re
 
-    from tei_chunker_spark.operators.extract import section_metadata_pipeline
+    from tei_chunker_spark.operators.extract import python_tasks, section_metadata_pipeline
 
     df = spark.read.parquet(corpus_path)
     job = JobConfig(chunker=JOB.chunker, shuffle_partitions=64)
-    n = min(job.shuffle_partitions, spark.sparkContext.defaultParallelism)
+    n = python_tasks(spark, job)
     for out in (extract_pipeline(df, job), section_metadata_pipeline(df, job)):
         plan = executed_plan(out)
         assert re.search(rf"hashpartitioning\(doc_id#\d+, {n}\)", plan), plan
